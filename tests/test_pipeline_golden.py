@@ -199,3 +199,73 @@ def test_load_config_sections_independent(tmp_path):
     q.write_text(patterns_to_json(DEFAULT_PATTERNS))
     patterns, routes, default = load_config(str(q))
     assert patterns == DEFAULT_PATTERNS and routes == DEFAULT_ROUTES
+
+
+def test_rollup_without_latency_groups(spark, warehouse, tmp_path):
+    """A loaded registry with no latency_ms/err_ms groups still runs: the
+    rollup writes those columns as typed nulls, with the types the
+    default registry gives them."""
+    import json
+
+    from watchman_spark.config import load_config
+
+    conf = tmp_path / "one_pattern.json"
+    conf.write_text(json.dumps({
+        "patterns": [{"name": "TOOL", "regex": r"\[tool:(?P<tool_name>[a-z_]+)\] invoked"}],
+        "routes": [{"sink": "tool_calls", "when": "parsed.tool_name IS NOT NULL"}],
+    }))
+    patterns, routes, default_sink = load_config(str(conf))
+    root = str(tmp_path / "wh")
+    wh = ParquetWarehouse(root)
+    wh.write_append(
+        warehouse[0].read(spark, "transcripts", schema=TRANSCRIPT_SCHEMA), "transcripts"
+    )
+    cfg = PipelineConfig(
+        warehouse=root, patterns=patterns, routes=routes, default_sink=default_sink,
+        n_buckets=4, run_id="one-pattern",
+    )
+    m = run_pipeline(spark, cfg, role_dim=role_dim(spark), tool_dim=tool_dim(spark))
+    assert m.rows_in == warehouse[2].rows_in
+    assert m.rows_per_sink["tool_calls"] == warehouse[2].rows_per_sink["tool_calls"]
+
+    rollup = wh.read(spark, "agg_conv_role_tool")
+    default_rollup = warehouse[0].read(spark, "agg_conv_role_tool")
+    assert rollup.schema == default_rollup.schema
+    assert rollup.agg(F.sum("n")).first()[0] == m.rows_in
+    assert rollup.filter(
+        F.col("sum_latency_ms").isNotNull() | F.col("max_err_ms").isNotNull()
+    ).count() == 0
+
+
+def test_aggregate_jobs_inherit_the_callers_job_group(spark, tmp_path):
+    """The read-back aggregate jobs run on helper threads; they must still
+    carry the job group (and other local properties) of the thread that
+    called run_pipeline."""
+    from watchman_spark.synth import SynthParams
+
+    root = str(tmp_path / "wh")
+    wh = ParquetWarehouse(root)
+    wh.write_append(
+        synth_transcripts(spark, SynthParams(seed=5, n_convs=20, C=120, hot_cap=40)),
+        "transcripts",
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "pipeline-caller-group"
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "caller")
+    try:
+        run_pipeline(
+            spark,
+            PipelineConfig(warehouse=root, n_buckets=4, run_id="grouped"),
+            role_dim=role_dim(spark),
+            tool_dim=tool_dim(spark),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    escaped = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+    assert not escaped, f"jobs outside the caller's group: {sorted(escaped)}"
+    # the staged write, the rollup write and the distinct-convs collect
+    assert len(tracker.getJobIdsForGroup(group)) >= 3

@@ -146,6 +146,113 @@ def test_pipeline_single_exchange(spark, tmp_path):
     assert plan.count("BroadcastExchange") == 2
 
 
+def _optimized_leaf(df) -> str:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return plan.strip().splitlines()[-1].strip()
+
+
+def _jvm_schema(df):
+    # re-derived from the JVM plan, not the Python-side cached schema
+    return df.select("*").schema
+
+
+def test_driver_tables_are_local_relations(spark, tmp_path):
+    """Tables built on the driver (the role/tool dimensions, an empty
+    read, the metadata listings) must be Arrow-backed LocalRelations: a
+    list-built table is a Python RDD, and every broadcast or read of it
+    runs a Python-worker job. The rows and the schema (nullability
+    included) are pinned, so the Arrow conversion cannot retype a column."""
+    import json
+
+    import pyarrow as pa
+    from pyspark.sql import Row
+    from pyspark.sql.types import (
+        ArrayType,
+        BooleanType,
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from watchman_spark.schema import TRANSCRIPT_SCHEMA
+    from watchman_spark.sources.warehouse import ParquetWarehouse
+    from watchman_spark.synth import role_dim, tool_dim
+
+    def local(df):
+        assert df.isLocal()
+        assert _optimized_leaf(df).startswith("LocalRelation"), _optimized_leaf(df)
+        return df
+
+    def not_null(name, t):
+        return StructField(name, t, False)
+
+    rd = local(role_dim(spark))
+    assert _jvm_schema(rd) == StructType(
+        [not_null("role", StringType()), not_null("role_group", StringType()),
+         not_null("is_agent", BooleanType())]
+    )
+    assert rd.collect() == [
+        Row(role="user", role_group="human", is_agent=False),
+        Row(role="assistant", role_group="agent", is_agent=True),
+        Row(role="system", role_group="infra", is_agent=False),
+        Row(role="tool", role_group="agent", is_agent=True),
+        Row(role="observer", role_group="human", is_agent=False),
+    ]
+
+    td = local(tool_dim(spark))
+    assert _jvm_schema(td) == StructType(
+        [not_null("tool", StringType()), not_null("tool_category", StringType()),
+         not_null("owner_team", StringType())]
+    )
+    assert [tuple(r) for r in td.collect()] == [
+        ("search_web", "search", "core"),
+        ("run_code", "code", "infra"),
+        ("read_file", "file", "platform"),
+        ("write_file", "file", "apps"),
+        ("fetch_url", "web", "core"),
+        ("query_db", "code", "infra"),
+        ("send_mail", "web", "platform"),
+        ("calc", "code", "apps"),
+    ]
+
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    empty = local(wh.read(spark, "transcripts", schema=TRANSCRIPT_SCHEMA))
+    assert _jvm_schema(empty) == TRANSCRIPT_SCHEMA
+    assert empty.collect() == []
+
+    wh.write_append_arrow(
+        "t", pa.table({"k": pa.array([1, 2, 3], pa.int64())}), lineage={"run_id": "a"}
+    )
+    wh.write_append_arrow("t", pa.table({"k": pa.array([4], pa.int64())}))
+    snaps = local(wh.meta_snapshots(spark, "t"))
+    assert _jvm_schema(snaps) == StructType(
+        [StructField("id", LongType()), StructField("committed_at", DoubleType()),
+         StructField("op", StringType()), StructField("rows", LongType()),
+         StructField("partition_by", ArrayType(StringType())),
+         StructField("replaces", ArrayType(LongType())),
+         StructField("lineage", StringType())]
+    )
+    got = [r.asDict() for r in snaps.collect()]
+    assert all(isinstance(r.pop("committed_at"), float) for r in got)
+    assert got == [
+        {"id": 1, "op": "append", "rows": 3, "partition_by": [], "replaces": [],
+         "lineage": json.dumps({"run_id": "a"})},
+        {"id": 2, "op": "append", "rows": 1, "partition_by": [], "replaces": [],
+         "lineage": "{}"},
+    ]
+
+    files = local(wh.meta_files(spark, "t"))
+    assert _jvm_schema(files) == StructType(
+        [StructField("commit_id", LongType()), StructField("path", StringType()),
+         StructField("rows", LongType()), StructField("bytes", LongType())]
+    )
+    got = files.orderBy("commit_id").collect()
+    assert [(r.commit_id, r.rows) for r in got] == [(1, 3), (2, 1)]
+    assert all(r.path.endswith(".parquet") and r.bytes > 0 for r in got)
+
+
 def test_knn_join_no_cartesian_and_windowed(spark):
     """Batch kNN: the candidate join must be a bucket equi-join (never a
     cartesian/broadcast-nested-loop over the corpus) feeding one window —

@@ -5,7 +5,16 @@ lookup dimensions". Dimensions are bounded-small by construction
 (FIXTURES.md §2-3), so the broadcast hint is always correct — no shuffle,
 map-side only. Joins are LEFT OUTER: unknown roles/tools keep their rows
 with null dimension attributes (enrichment must never drop rows — the
-per-sink count invariants depend on it)."""
+per-sink count invariants depend on it).
+
+Dimensions must be driver-local (``session.local_frame``) or read from
+parquet. A dimension built from a Python list is a Python RDD: every
+broadcast of it — once per run and once per stream epoch — runs a 4-task
+job that starts Python workers, measured on ``local[4]`` at 8-18 ms of CPU
+but 250-520 ms of wall, and each stream epoch's write waited for the two
+dimension jobs. A ``LocalRelation``'s broadcast job is JVM-only and takes
+10-18 ms; the median stream epoch (pipebench tail_stream, traced) takes
+1.26 s with driver-local dimensions and 2.08 s with list-built ones."""
 
 from __future__ import annotations
 

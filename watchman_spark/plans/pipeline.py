@@ -49,6 +49,33 @@ from ..sources import checkpoint as ckpt
 from ..sources.warehouse import ParquetWarehouse
 
 
+def _run_inheriting(*fns):
+    """Run ``fns`` concurrently and return their results in order,
+    re-raising the first failure. Each runs on a
+    ``pyspark.InheritableThread``, so its jobs carry the caller's job group
+    and local properties, and a job description it sets stays on its own
+    thread."""
+    from pyspark import InheritableThread
+
+    results: list = [None] * len(fns)
+    errors: list[BaseException] = []
+
+    def call(i):
+        try:
+            results[i] = fns[i]()
+        except BaseException as e:
+            errors.append(e)
+
+    threads = [InheritableThread(target=call, args=(i,)) for i in range(len(fns))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+    return results
+
+
 def build_routed(
     df: DataFrame,
     cfg: PipelineConfig,
@@ -224,20 +251,25 @@ def run_pipeline(
         #    parquet footers above — it costs nothing here.
         if m.rows_in > 0:
             agg_in = spark.read.schema(routed.schema).parquet(staging)
-            # r6 (guide §2.6 "overlap independent jobs"): (a) and (b) are
-            # independent — (b) collects, (a) writes a different table —
-            # so submit both from a 2-thread pool and let (b)'s tasks
-            # back-fill executors freed by (a)'s tail instead of serializing
-            # two lean jobs' scheduling + straggler tails.
-            from concurrent.futures import ThreadPoolExecutor
+            # a registry without the latency/error groups still gets the
+            # rollup's columns, typed as the default registry types them
+            have = set(agg_in.columns)
+            sum_latency = (
+                F.sum("latency_ms") if "latency_ms" in have else F.lit(None).cast("bigint")
+            )
+            max_err = F.max("err_ms") if "err_ms" in have else F.lit(None).cast("int")
 
+            # (a) and (b) are independent — (b) collects, (a) writes a
+            # different table — so they run on two threads and (b)'s tasks
+            # back-fill executors freed by (a)'s tail instead of
+            # serializing two lean jobs' scheduling and straggler tails.
             def _job_a():
                 spark.sparkContext.setJobDescription("pipeline: rollup write")
                 wh.write_append(
                     agg_in.groupBy("conv_id", "role", "tool").agg(
                         F.count(F.lit(1)).alias("n"),
-                        F.sum("latency_ms").alias("sum_latency_ms"),
-                        F.max("err_ms").alias("max_err_ms"),
+                        sum_latency.alias("sum_latency_ms"),
+                        max_err.alias("max_err_ms"),
                     ),
                     "agg_conv_role_tool",
                     lineage=lineage,
@@ -254,11 +286,7 @@ def run_pipeline(
                     .collect()
                 }
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_a = pool.submit(_job_a)
-                fut_b = pool.submit(_job_b)
-                dc = fut_b.result()
-                fut_a.result()
+            _, dc = _run_inheriting(_job_a, _job_b)
             m.parse_miss = sink_n_text.get(cfg.default_sink, 0)
             counts_tbl = pa.table(
                 {

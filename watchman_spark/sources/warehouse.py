@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
 
 _COMMIT_RE = re.compile(r"^(\d{8})\.json$")
 _MANIFEST_RE = re.compile(r"^manifest-(\d{8})\.json$")
@@ -839,22 +840,22 @@ class ParquetWarehouse:
         lineage (json). Driver-side metadata only — O(commits) via the
         manifest-compacted log, no data file is touched."""
         rows = [
-            {
-                "id": c["id"],
-                "committed_at": float(c.get("ts", 0.0)),
-                "op": c.get("op", "append"),
-                "rows": c["rows"],
-                "partition_by": list(c.get("partition_by") or []),
-                "replaces": list(c.get("replaces") or []),
-                "lineage": json.dumps(c.get("lineage") or {}, sort_keys=True),
-            }
+            (
+                c["id"],
+                float(c.get("ts", 0.0)),
+                c.get("op", "append"),
+                c["rows"],
+                list(c.get("partition_by") or []),
+                list(c.get("replaces") or []),
+                json.dumps(c.get("lineage") or {}, sort_keys=True),
+            )
             for c in self.commits(table)
         ]
         schema = (
             "id long, committed_at double, op string, rows long, "
             "partition_by array<string>, replaces array<long>, lineage string"
         )
-        return spark.createDataFrame(rows, schema=schema)
+        return local_frame(spark, rows, schema)
 
     def meta_files(
         self, spark: SparkSession, table: str, snapshot: int | None = None
@@ -871,15 +872,15 @@ class ParquetWarehouse:
             ds = pa_ds.dataset(d, format="parquet", partitioning="hive")
             for frag in ds.get_fragments():
                 out.append(
-                    {
-                        "commit_id": c["id"],
-                        "path": os.path.relpath(frag.path, d),
-                        "rows": frag.metadata.num_rows,
-                        "bytes": os.path.getsize(frag.path),
-                    }
+                    (
+                        c["id"],
+                        os.path.relpath(frag.path, d),
+                        frag.metadata.num_rows,
+                        os.path.getsize(frag.path),
+                    )
                 )
-        return spark.createDataFrame(
-            out, schema="commit_id long, path string, rows long, bytes long"
+        return local_frame(
+            spark, out, "commit_id long, path string, rows long, bytes long"
         )
 
     def read(
@@ -947,7 +948,7 @@ class ParquetWarehouse:
         if not dirs:
             if schema is None:
                 raise ValueError(f"table {table!r} empty and no schema given")
-            return spark.createDataFrame([], schema=schema)
+            return local_frame(spark, [], schema)
         partitioned = any(c["partition_by"] for c in cs)
         reader = spark.read
         if schema is not None and not partitioned:
